@@ -161,7 +161,10 @@ def curate_corpus(
     exact-dup class AND (optionally) shares no word n-gram with the
     held-out eval source -- eval docs themselves never ship.
     Idempotent: overwrite mode, deterministic hash split, so re-runs
-    produce byte-equivalent partitions.  Returns the manifest dict
+    write the same rows to the same partitions.  Not the same bytes:
+    row order within a file follows the shuffle's fetch order, so
+    file sizes can differ between runs (87370 vs 87438 bytes on a
+    500-doc corpus).  Returns the manifest dict
     (also written as _MANIFEST.json beside the data).
 
     Optional stages (r7 -- each reuses the EXACT expression of its

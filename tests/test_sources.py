@@ -1,8 +1,11 @@
 """Sources & sinks: schema-enforced readers, partitioned parquet sink
-with partition pruning, and the lazy JDBC reader builder."""
+with partition pruning, the lazy JDBC reader builder, and the
+load_table schema memo."""
 
 from __future__ import annotations
 
+import itertools
+import os
 import shutil
 import tempfile
 
@@ -10,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from de_realtime_voting_spark.sources import (
+    TABLE_NAMES,
     jdbc_reader,
     load_table,
     read_csv,
@@ -197,3 +201,81 @@ def test_read_binary_dir_glob_and_size_guard(spark, tmp_out):
 
     small = read_binary_dir(spark, d, glob="*.bin", max_bytes=10)
     assert [r["path"].rsplit("/", 1)[-1] for r in small.collect()] == ["a.bin"]
+
+
+# -- load_table schema memo --------------------------------------------
+
+_group_ids = itertools.count()
+
+
+def _with_jobs(spark, fn):
+    """Run ``fn()`` under a fresh job group; return its result and the
+    number of Spark jobs it ran (statusTracker job ids of the group)."""
+    sc = spark.sparkContext
+    gid = f"memo-test-{next(_group_ids)}"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", gid)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events are async
+    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+@pytest.mark.parametrize("name", TABLE_NAMES)
+def test_second_load_runs_no_job(spark, sf_dir, name):
+    load_table(spark, sf_dir, name)
+    df, jobs = _with_jobs(spark, lambda: load_table(spark, sf_dir, name))
+    assert jobs == 0
+    assert df.columns  # still a resolved scan
+
+
+def test_memoized_schema_equals_fresh_inference(spark, sf_dir, tmp_out):
+    fresh_dir = f"{tmp_out}/fresh_copy"
+    os.makedirs(fresh_dir, exist_ok=True)
+    for name in TABLE_NAMES:
+        shutil.copy(f"{sf_dir}/{name}.parquet", fresh_dir)
+        load_table(spark, sf_dir, name)  # memoized from here on
+        warm = load_table(spark, sf_dir, name)
+        cold = load_table(spark, fresh_dir, name)  # a new path: inferred
+        assert warm.schema == cold.schema, name
+    events = load_table(spark, sf_dir, "events")
+    assert dict(events.dtypes)["ts"] == "timestamp"
+    fresh = load_table(spark, fresh_dir, "events")
+    assert sorted(events.collect()) == sorted(fresh.collect())
+
+
+def test_rewritten_file_is_reinferred(spark, tmp_out):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = f"{tmp_out}/rewrite"
+    os.makedirs(d, exist_ok=True)
+    path = f"{d}/region.parquet"
+    pq.write_table(pa.table({"r_regionkey": [0, 1], "r_name": ["AFRICA", "AMERICA"]}), path)
+    load_table(spark, d, "region")
+    _, jobs = _with_jobs(spark, lambda: load_table(spark, d, "region"))
+    assert jobs == 0
+    # rewrite in place at once: no sleep, no utime, same mtime tick likely
+    pq.write_table(
+        pa.table({"r_regionkey": [0, 1], "r_name": ["AFRICA", "AMERICA"], "r_code": [7, 8]}),
+        path,
+    )
+    df, jobs = _with_jobs(spark, lambda: load_table(spark, d, "region"))
+    assert jobs >= 1
+    assert df.columns == ["r_regionkey", "r_name", "r_code"]
+    assert sorted(tuple(r) for r in df.collect()) == [(0, "AFRICA", 7), (1, "AMERICA", 8)]
+    _, jobs = _with_jobs(spark, lambda: load_table(spark, d, "region"))
+    assert jobs == 0
+
+
+def test_directory_table_loads_and_is_not_memoized(spark, sf_dir, tmp_out):
+    d = f"{tmp_out}/dir_form"
+    nation = load_table(spark, sf_dir, "nation")
+    nation.repartition(3).write.mode("overwrite").parquet(f"{d}/nation.parquet")
+    load_table(spark, d, "nation")
+    df, jobs = _with_jobs(spark, lambda: load_table(spark, d, "nation"))
+    assert jobs >= 1  # directories always infer
+    assert df.schema == nation.schema
+    assert sorted(df.collect()) == sorted(nation.collect())
