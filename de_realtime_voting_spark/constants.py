@@ -497,11 +497,11 @@ BPE_MERGE_STEPS = 6
 # approximation) and applying them in a single rewrite fold.  Cuts
 # the per-merge driver round-trip + vocab rewrite to one per BATCH
 # merges -- the shape a real 100k-merge tokenizer run needs.
-# Width tuned at production depth (r7, tools/bpe_ab.py at sf1 /
-# 500 merges -- PLANS.md): sequential 442 s; B=3 196 s (-0.33%
-# compression vs sequential); B=8 124 s (-1.30%, i.e. BETTER
-# compression -- greedy is not optimal); B=16 117 s (+0.41%).  B=8
-# is the knee: 3.6x over sequential, drift bounded ~1% and favorable
+# Width tuned at production depth (r7, sf1 / 500 merges -- PLANS.md
+# "Production depth + width tuning (r7)"): sequential 442 s; B=3
+# 196 s (-0.33% compression vs sequential); B=8 124 s (-1.30%, i.e.
+# BETTER compression -- greedy is not optimal); B=16 117 s (+0.41%).
+# B=8 is the knee: 3.6x over sequential, drift bounded ~1% and favorable
 # here; beyond it per-pass CASE-chain cost eats the round-trip
 # savings.
 BPE_BATCH = 8
@@ -573,11 +573,12 @@ FUZZY_DECONTAM_THRESHOLD = 0.5
 # iterations -- both engines compute iteration t+1 from the same
 # published iteration-t model.
 QC_BUCKETS = 128
-# 3 full-batch steps.  Depth was A/B'd at r9 (tools/qc_depth_ab.py:
-# the exact loop, 30 steps at sf1): per-step wall is FLAT (first-5
-# 3.2 s vs last-5 1.9 s -- no lineage/cache leak) and max |dw| decays
-# geometrically (1.2e-3 at step 30), so Spark-side depth is a pure
-# linear-cost knob -- production trains as deep as it likes.  The
+# 3 full-batch steps.  Depth was A/B'd at r9 (PLANS.md "Measured:
+# quality-classifier trainer at depth": the exact loop, 30 steps at
+# sf1): per-step wall is FLAT (first-5 3.2 s vs last-5 1.9 s -- no
+# lineage/cache leak) and max |dw| decays geometrically (1.2e-3 at
+# step 30), so Spark-side depth is a pure linear-cost knob --
+# production trains as deep as it likes.  The
 # BINDING constraint is the ORACLE: the closed CTE chain costs ~2x
 # wall per +2 steps and a 5-step chain measured 62-65 s per query in
 # DuckDB at the driver's sf0.01 (vs ~35 s at 3) -- risking the

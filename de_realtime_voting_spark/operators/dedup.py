@@ -230,53 +230,89 @@ def _band_candidate_pairs(bands: DataFrame) -> DataFrame:
     )
 
 
-def _hashed_sides(sh: DataFrame, a: str = "doc_a", b: str = "doc_b"):
-    """Both sides of a shingle-Jaccard verify join, with each doc's
-    shingle set hashed to 60-bit digests (functions.columns.md5_int60)
-    MAP-SIDE, before the join's shuffle.
+def _shingle_digests(documents: DataFrame) -> DataFrame:
+    """(doc_id, shingles, dig), PERSISTED: the shingle frame with each
+    doc's shingle set hashed ONCE to 60-bit digests
+    (functions.columns.md5_int60_set).  Every MinHash consumer feeds
+    it to banding AND both verify sides, so the signature and the
+    per-shingle md5 fold run once, not once per use (r13).  Deliberately
+    not unpersisted: the lazy plan outlives the function; the cache is
+    LRU-evictable and the harnesses clearCache() between queries.
 
-    The r12 seventh-decade catch: `dedup_minhash_topk` died ENOSPC at
-    sf100 because the verify join shipped RAW shingle-string arrays
-    onto every candidate-pair row -- a ~25-char string costs ~40+
-    bytes in an UnsafeArrayData of strings, the hashed bigint 8 bytes
-    flat-packed, so the pair-join shuffle (the family's dominant
-    footprint: 2 arrays x 23M+ candidate rows at sf100) shrinks ~5x.
-    Jaccard over the digests equals Jaccard over the strings (equal
-    strings hash equal; distinct stays distinct up to the 2^60
-    birthday bound -- ~1e-9 per pair at 1k-shingle docs), and the
-    oracle computes the IDENTICAL integer fold, so cross-engine
-    parity is exact by construction, collisions included."""
+    Why digests (the r12 seventh-decade catch): `dedup_minhash_topk`
+    died ENOSPC at sf100 because the verify join shipped RAW
+    shingle-string arrays onto every candidate-pair row -- a ~25-char
+    string costs ~40+ bytes in an UnsafeArrayData of strings, the
+    hashed bigint 8 bytes flat-packed, so the pair-join shuffle (the
+    family's dominant footprint: 2 arrays x 23M+ candidate rows at
+    sf100) shrinks ~5x.  Jaccard over the digests equals Jaccard over
+    the strings (equal strings hash equal; distinct stays distinct up
+    to the 2^60 birthday bound -- ~1e-9 per pair at 1k-shingle docs),
+    and the oracle computes the IDENTICAL integer fold, so
+    cross-engine parity is exact by construction, collisions
+    included."""
     from ..functions.columns import md5_int60_set
 
-    # r13: when the caller's (persisted) frame already carries the
-    # digest column (`dig`, see _with_digests), both sides read it
-    # from cache instead of re-hashing every shingle once per side --
-    # the per-shingle md5 fold ran TWICE per consumer query otherwise.
-    dig = F.col("dig") if "dig" in sh.columns else md5_int60_set(F.col("shingles"))
-    sa = sh.select(F.col("doc_id").alias(a), dig.alias("sh_a"))
-    sb = sh.select(F.col("doc_id").alias(b), dig.alias("sh_b"))
-    return sa, sb
+    sh = _doc_shingles(documents)
+    return sh.withColumn("dig", md5_int60_set(F.col("shingles"))).persist()
 
 
-def _with_digests(sh: DataFrame) -> DataFrame:
-    """(doc_id, shingles, dig): the shingle frame with its 60-bit
-    digest sets computed ONCE -- persisted by callers so the verify
-    sides (_hashed_sides) read the digests from cache instead of
-    re-folding md5 over every shingle per side (r13)."""
-    from ..functions.columns import md5_int60_set
+def _verify_sides(
+    sh: DataFrame, cand: DataFrame, a: str = "doc_a", b: str = "doc_b"
+) -> DataFrame:
+    """Candidate pairs (keyed ``a``, ``b``) joined to both docs' digest
+    sets as ``sh_a``/``sh_b`` -- the shingle-Jaccard verify join.  The
+    digests are read from ``sh``'s ``dig`` column (_shingle_digests),
+    so only 60-bit digests ride the join's shuffle."""
+    sa = sh.select(F.col("doc_id").alias(a), F.col("dig").alias("sh_a"))
+    sb = sh.select(F.col("doc_id").alias(b), F.col("dig").alias("sh_b"))
+    return cand.join(sa, a).join(sb, b)
 
-    return sh.withColumn("dig", md5_int60_set(F.col("shingles")))
+
+def _cross_band_candidates(
+    bands: DataFrame, build, probe_id: str, build_id: str
+) -> DataFrame:
+    """Distinct (probe_id, build_id) pairs sharing an LSH band, where
+    the boolean column ``build`` splits ``bands`` into the build side
+    (true) and the probe side (false) -- the asymmetric band join of
+    the incremental and decontamination paths.  Only probe x build
+    collisions are generated, never probe x probe or build x build."""
+    build_side = bands.where(build).select(
+        F.col("doc_id").alias(build_id), "band_idx", "band_hash"
+    )
+    probe_side = bands.where(~build).select(
+        F.col("doc_id").alias(probe_id),
+        F.col("band_idx").alias("band_idx_p"),
+        F.col("band_hash").alias("band_hash_p"),
+    )
+    return (
+        probe_side.join(
+            build_side,
+            (F.col("band_idx") == F.col("band_idx_p"))
+            & (F.col("band_hash") == F.col("band_hash_p")),
+        )
+        .select(probe_id, build_id)
+        .distinct()
+    )
 
 
 def _jac_h():
-    """Exact-Jaccard expression over the hashed verify sides -- one
-    definition for every consumer of _hashed_sides.  A function, not
-    a module-level Column: building a Column from a string name needs
-    an active SparkContext, and this module imports before any
+    """Exact-Jaccard expression over the verify sides' digest sets
+    (_verify_sides) -- one definition for every consumer.  A function,
+    not a module-level Column: building a Column from a string name
+    needs an active SparkContext, and this module imports before any
     session exists in the harnesses."""
     return F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
         F.array_union("sh_a", "sh_b")
     )
+
+
+def _minhash_candidates(documents: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, sh_a, sh_b): every symmetric LSH candidate pair
+    (doc_a < doc_b) with both docs' digest sets -- the one frame the
+    pairs, top-k and threshold-sweep consumers verify over."""
+    sh = _shingle_digests(documents)
+    return _verify_sides(sh, _band_candidate_pairs(_doc_bands_from(sh)))
 
 
 def dedup_minhash_pairs(documents: DataFrame) -> DataFrame:
@@ -286,19 +322,12 @@ def dedup_minhash_pairs(documents: DataFrame) -> DataFrame:
     Jaccard is |A∩B| / |A∪B| of distinct shingle sets -- an integer
     ratio, so Spark and the oracle agree bit-for-bit.  r12: the
     verify join ships 60-bit shingle DIGESTS, not raw strings -- see
-    _hashed_sides (the seventh-decade ENOSPC catch: wide string
+    _shingle_digests (the seventh-decade ENOSPC catch: wide string
     arrays on tens of millions of pair rows are the family's real
     shuffle footprint).
     """
-    # shingles feed the band join AND both sides of the verify join;
-    # persist so the signature computation runs once, not three times
-    # (digests ride the cache too -- _with_digests, r13)
-    sh = _with_digests(_doc_shingles(documents)).persist()
-    cand = _band_candidate_pairs(_doc_bands_from(sh))
-    sa, sb = _hashed_sides(sh)
     return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        _minhash_candidates(documents)
         .select("doc_a", "doc_b", _jac_h().alias("jaccard"))
         .where(F.col("jaccard") >= JACCARD_THRESHOLD)
     )
@@ -1008,32 +1037,15 @@ def dedup_incremental(documents: DataFrame) -> DataFrame:
     from ..constants import INCREMENTAL_EXISTING_PCT
     from ..functions.columns import md5_pct_bucket
 
-    sh = _with_digests(_doc_shingles(documents)).persist()
+    sh = _shingle_digests(documents)
     bands = _doc_bands_from(sh).withColumn(
         "is_existing", md5_pct_bucket(F.col("doc_id")) < INCREMENTAL_EXISTING_PCT
     )
-    old = bands.where(F.col("is_existing")).select(
-        F.col("doc_id").alias("existing_doc"), "band_idx", "band_hash"
+    cand = _cross_band_candidates(
+        bands, F.col("is_existing"), "new_doc", "existing_doc"
     )
-    new = bands.where(~F.col("is_existing")).select(
-        F.col("doc_id").alias("new_doc"),
-        F.col("band_idx").alias("band_idx_n"),
-        F.col("band_hash").alias("band_hash_n"),
-    )
-    cand = (
-        new.join(
-            old,
-            (F.col("band_idx") == F.col("band_idx_n"))
-            & (F.col("band_hash") == F.col("band_hash_n")),
-        )
-        .select("new_doc", "existing_doc")
-        .distinct()
-    )
-    # hashed-digest verify sides (r12, see _hashed_sides)
-    sa, sb = _hashed_sides(sh, a="new_doc", b="existing_doc")
     return (
-        cand.join(sa, "new_doc")
-        .join(sb, "existing_doc")
+        _verify_sides(sh, cand, "new_doc", "existing_doc")
         .select("new_doc", "existing_doc", _jac_h().alias("jaccard"))
         .where(F.col("jaccard") >= JACCARD_THRESHOLD)
     )
@@ -1669,11 +1681,9 @@ def minhash_jaccard_estimate(documents: DataFrame) -> DataFrame:
     candidate set.  Estimates are exact rationals (matches / SIGS),
     so both engines agree bit-for-bit.
     """
-    # persist feeds banding AND both verify sides; deliberately not
-    # unpersisted (lazy plan outlives the function; LRU-evictable,
-    # harnesses clearCache() between queries)
-    sh = _with_digests(_doc_shingles(documents)).persist()
     from ..functions.pandas_udfs import minhash_signature_pandas
+
+    sh = _shingle_digests(documents)
 
     sigd = sh.select(
         "doc_id",
@@ -1682,10 +1692,9 @@ def minhash_jaccard_estimate(documents: DataFrame) -> DataFrame:
         minhash_signature_pandas(F.col("shingles")).alias("sig"),
     )
     cand = _band_candidate_pairs(_doc_bands_from(sh))
-    # hashed-digest shingle sets ride the join (r12, _hashed_sides
-    # rationale); the signature arrays must ride too, so the sides
-    # are built here rather than through the shared helper (digests
-    # read from the cached frame, computed once -- r13)
+    # digest sets ride the join (see _shingle_digests); the signature
+    # arrays must ride too, so the sides are built here rather than
+    # through _verify_sides
     sa = sigd.select(
         F.col("doc_id").alias("doc_a"),
         F.col("dig").alias("sh_a"),
@@ -1797,19 +1806,10 @@ def dedup_threshold_sweep(documents: DataFrame) -> DataFrame:
     """
     from ..constants import THRESHOLD_SWEEP_BINS as BINS
 
-    # persist: shingles feed the band join AND both verify sides;
-    # deliberately not unpersisted (lazy plan outlives the function;
-    # LRU-evictable, harnesses clearCache() between queries); digests
-    # ride the cache (_with_digests, r13)
-    sh = _with_digests(_doc_shingles(documents)).persist()
-    cand = _band_candidate_pairs(_doc_bands_from(sh))
-    # hashed-digest verify sides (r12, see _hashed_sides)
-    sa, sb = _hashed_sides(sh)
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size(F.array_union("sh_a", "sh_b"))
     binned = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        _minhash_candidates(documents)
         .select(
             F.floor(inter * F.lit(BINS) / union).cast("int").alias("bin"),
         )
@@ -2360,31 +2360,12 @@ def fuzzy_decontam(documents: DataFrame) -> DataFrame:
     """
     from ..constants import EVAL_SOURCE, FUZZY_DECONTAM_THRESHOLD
 
-    sh = _with_digests(_doc_shingles(documents)).persist()
+    sh = _shingle_digests(documents)
     src = documents.select("doc_id", (F.col("source") == EVAL_SOURCE).alias("is_eval"))
     bands = _doc_bands_from(sh).join(src, "doc_id")
-    ev = bands.where(F.col("is_eval")).select(
-        F.col("doc_id").alias("eval_doc_id"), "band_idx", "band_hash"
-    )
-    corpus = bands.where(~F.col("is_eval")).select(
-        F.col("doc_id").alias("corpus_doc"),
-        F.col("band_idx").alias("band_idx_c"),
-        F.col("band_hash").alias("band_hash_c"),
-    )
-    cand = (
-        corpus.join(
-            ev,
-            (F.col("band_idx") == F.col("band_idx_c"))
-            & (F.col("band_hash") == F.col("band_hash_c")),
-        )
-        .select("corpus_doc", "eval_doc_id")
-        .distinct()
-    )
-    # hashed-digest verify sides (r12, see _hashed_sides)
-    sa, sb = _hashed_sides(sh, a="corpus_doc", b="eval_doc_id")
+    cand = _cross_band_candidates(bands, F.col("is_eval"), "corpus_doc", "eval_doc_id")
     return (
-        cand.join(sa, "corpus_doc")
-        .join(sb, "eval_doc_id")
+        _verify_sides(sh, cand, "corpus_doc", "eval_doc_id")
         .select(
             F.col("corpus_doc").alias("doc_id"),
             "eval_doc_id",
@@ -2526,7 +2507,7 @@ def segment_minhash_dedup(documents: DataFrame) -> DataFrame:
         segs.groupBy("seg_hash")
         .agg(F.min(F.struct("sid", "shingles")).alias("rep"))
         # digest computed ONCE into the cache; both verify sides read
-        # it instead of re-folding md5 per side (_with_digests, r13)
+        # it instead of re-folding md5 per side (_shingle_digests, r13)
         .withColumn("dig", md5_int60_set(F.col("rep.shingles")))
         .persist()  # feeds banding, both verify sides, and the occ join
     )
@@ -2538,11 +2519,8 @@ def segment_minhash_dedup(documents: DataFrame) -> DataFrame:
     # reuse the shared banding + candidate machinery verbatim (reps are
     # keyed 'doc_id' for the duration; ids are sids)
     cand = _band_candidate_pairs(_doc_bands_from(reps))
-    # hashed-digest verify sides (r12, see _hashed_sides)
-    sa, sb = _hashed_sides(reps)
     dropped = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        _verify_sides(reps, cand)
         .where(_jac_h() >= SEGMENT_JACCARD_THRESHOLD)
         .select(F.col("doc_b").alias("rep_sid"))
         .distinct()
@@ -2638,18 +2616,12 @@ def dedup_minhash_topk(documents: DataFrame) -> DataFrame:
     shipping raw shingle-string arrays onto 23M+ candidate rows (its
     unfiltered jaccard output keeps every candidate, so nothing
     row-reduces before the window); the verify join now ships 60-bit
-    digests (_hashed_sides), ~5x less shuffle.
+    digests (_shingle_digests), ~5x less shuffle.
     """
     from ..constants import SIM_TOPK_K
 
-    # digests ride the cache (_with_digests, r13)
-    sh = _with_digests(_doc_shingles(documents)).persist()
-    cand = _band_candidate_pairs(_doc_bands_from(sh))
-    sa, sb = _hashed_sides(sh)
-    pairs = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", _jac_h().alias("jaccard"))
+    pairs = _minhash_candidates(documents).select(
+        "doc_a", "doc_b", _jac_h().alias("jaccard")
     )
     directed = pairs.select(
         F.col("doc_a").alias("doc_id"),

@@ -2091,11 +2091,7 @@ def _round_py(v: float, n: int) -> float:
     return math.floor(v * s + 0.5) / s
 
 
-def _qc_train_weights(
-    documents: DataFrame,
-    iters: int | None = None,
-    step_log: list | None = None,
-) -> tuple[list[float], float, DataFrame]:
+def _qc_train_weights(documents: DataFrame) -> tuple[list[float], float, DataFrame]:
     """QC_ITERS full-batch gradient-descent steps of the hashed-
     feature logistic regression; returns (weights, bias, feats).
 
@@ -2124,18 +2120,9 @@ def _qc_train_weights(
     generic expressions with the all-zero model: 0.0 * x folds to
     exactly 0.0 and sigmoid(0) is exactly 0.5 in IEEE, which is what
     the oracle's closed-form first step hardcodes.
-
-    ``iters``/``step_log`` exist for the depth A/B harness
-    (tools/qc_depth_ab.py): iters overrides QC_ITERS, step_log (a
-    list) receives one (seconds, max |delta w|) tuple per step.  The
-    registry path passes neither.
     """
-    import time as _time
-
     from ..constants import QC_BUCKETS, QC_ITERS, QC_LR, QC_ROUND
 
-    if iters is None:
-        iters = QC_ITERS
     # persist: every iteration's single pass re-reads the packed
     # frame (released by the harnesses' per-query clearCache)
     fd = (
@@ -2153,8 +2140,7 @@ def _qc_train_weights(
     n: int | None = None
     w = [0.0] * QC_BUCKETS
     bias = 0.0
-    for _ in range(iters):
-        _t0 = _time.perf_counter()
+    for _ in range(QC_ITERS):
         r = _qc_resid(w, bias)
         # one exploded struct stream: each doc emits its per-bucket
         # gradient terms plus one bias term keyed b = -1 (and, on the
@@ -2184,18 +2170,10 @@ def _qc_train_weights(
         if n is None:
             n = int(grads.pop(-2, 0.0))
         gb = grads.pop(-1, 0.0)
-        new_w = [
+        w = [
             _round_py(w[i] - QC_LR * grads.get(i, 0.0) / n, QC_ROUND)
             for i in range(QC_BUCKETS)
         ]
-        if step_log is not None:
-            step_log.append(
-                (
-                    _time.perf_counter() - _t0,
-                    max(abs(a - b) for a, b in zip(new_w, w)),
-                )
-            )
-        w = new_w
         bias = _round_py(bias - QC_LR * gb / n, QC_ROUND)
     return w, bias, fd
 

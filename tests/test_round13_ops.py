@@ -271,6 +271,43 @@ def test_verify_join_digest_sides_equal_legacy_string_sides(spark):
     assert got == want and len(got) > 0
 
 
+def test_cross_band_candidates_emits_only_probe_build_pairs(spark):
+    """The asymmetric band join shared by dedup_incremental and
+    fuzzy_decontam: on a hand-made band frame it emits probe x build
+    collisions only (never probe x probe or build x build), a pair
+    sharing two bands once, nothing for an equal hash under a
+    different band index, and an empty frame when the build side is
+    empty."""
+    from de_realtime_voting_spark.operators.dedup import _cross_band_candidates
+
+    rows = [
+        # (doc_id, band_idx, band_hash, is_build)
+        (1, 0, "h0", True),
+        (1, 1, "h1", True),
+        (1, 2, "z", True),
+        (2, 2, "z", True),  # build x build collision with doc 1
+        (2, 3, "w", True),
+        (10, 0, "h0", False),  # shares TWO bands with doc 1
+        (10, 1, "h1", False),
+        (11, 1, "h0", False),  # doc 1's band-0 hash under band 1
+        (11, 4, "x", False),
+        (12, 4, "x", False),  # probe x probe collision with doc 11
+        (12, 3, "w", False),
+    ]
+    bands = spark.createDataFrame(
+        rows, "doc_id bigint, band_idx int, band_hash string, is_build boolean"
+    )
+    got = _cross_band_candidates(bands, F.col("is_build"), "probe", "build")
+    assert got.columns == ["probe", "build"]
+    assert sorted((r["probe"], r["build"]) for r in got.collect()) == [
+        (10, 1),
+        (12, 2),
+    ]
+    probe_only = bands.where(~F.col("is_build"))
+    empty = _cross_band_candidates(probe_only, F.col("is_build"), "probe", "build")
+    assert empty.collect() == []
+
+
 def test_cluster_labels_maxiter1_warning_is_honest(spark, sf_dir):
     """max_iter=1 runs only the folded init round; the non-convergence
     warning must say the count is unverified, not '-1 labels still
