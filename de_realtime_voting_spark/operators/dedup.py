@@ -42,15 +42,24 @@ N_BANDS = MINHASH_SIGS // MINHASH_BAND_ROWS
 
 
 def _shuffle_width(spark) -> int:
-    """The session's shuffle width as an int, tolerating non-numeric
-    conf values: some platforms set spark.sql.shuffle.partitions to
-    "auto", and a repartition count must not turn a tuning setting
-    into a query failure (ADVICE r6).  Falls back to
-    defaultParallelism, the same width the conf defaults to."""
-    try:
-        return int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        return spark.sparkContext.defaultParallelism
+    """The session's BATCH shuffle width as an int: the width
+    SQLConf.numShufflePartitions plans batch exchanges at, i.e. AQE's
+    initialPartitionNum when set, else spark.sql.shuffle.partitions
+    (session.py keeps the latter for streaming state, at the core
+    count).  Tolerates non-numeric conf values: some platforms set
+    spark.sql.shuffle.partitions to "auto", and a repartition count
+    must not turn a tuning setting into a query failure (ADVICE r6).
+    Falls back to defaultParallelism, the same width the conf
+    defaults to."""
+    for key in (
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+        "spark.sql.shuffle.partitions",
+    ):
+        try:
+            return int(spark.conf.get(key))
+        except (TypeError, ValueError):
+            pass
+    return spark.sparkContext.defaultParallelism
 
 
 def _spread(df: DataFrame) -> DataFrame:

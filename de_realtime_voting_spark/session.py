@@ -17,7 +17,15 @@ TUNED_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    "spark.sql.shuffle.partitions": "32",
+    # The BATCH shuffle width.  While AQE coalescing is on,
+    # SQLConf.numShufflePartitions resolves to this value, so every
+    # batch exchange is planned at 32 and AQE merges it at runtime.
+    # Streaming runs with AQE off and reads spark.sql.shuffle.partitions
+    # instead: that is the STREAM width, one state store per partition
+    # committed on every micro-batch and frozen into a query's
+    # checkpoint at first start, so it is set to the core count
+    # (get_spark, apply_session_tuning), not here.
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum": "32",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
     # 128 MiB input splits: big enough to amortize task overhead,
@@ -38,7 +46,7 @@ TUNED_CONF = {
 # still resident).  But a forced full GC every minute is NOT noise on
 # the sf0.1 bench: the 186-query sweep measured 377.3 s with
 # interval=60s vs 261.6 s at Spark's default (r12 A/B) -- each System.gc()
-# stops all 32 executor threads, and short queries eat a pause per
+# stops every executor thread, and short queries eat a pause per
 # minute for memory they never needed freed.  So the tightened
 # interval is OPT-IN for long single-session scale runs
 # (SPARK_GRAFT_PERIODIC_GC=60s; tools/scale_probe.py sets it), and the
@@ -52,7 +60,7 @@ def get_spark(app_name: str = "de-realtime-voting-spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = SparkSession.builder.appName(app_name).master(f"local[{cpus}]")
     # JVM-launch conf (ignored by getOrCreate on a live session): the
-    # single local JVM is driver AND all 32 executor threads, so the
+    # single local JVM is driver AND every executor thread, so the
     # 1g default heap starves broadcast builds at the sf1 probe
     # point.  8g measured BEST for the bench sweep -- a 24g heap let
     # G1 accumulate GC debt across the 156-query sequence and several
@@ -67,6 +75,7 @@ def get_spark(app_name: str = "de-realtime-voting-spark") -> SparkSession:
         builder = builder.config(k, v)
     for k, v in TUNED_CONF.items():
         builder = builder.config(k, v)
+    builder = builder.config("spark.sql.shuffle.partitions", cpus)
     return builder.getOrCreate()
 
 
@@ -103,8 +112,13 @@ def enable_rocksdb_state_store(spark: SparkSession) -> SparkSession:
 
 def apply_session_tuning(spark: SparkSession) -> SparkSession:
     """Best-effort runtime tuning for an externally-created session
-    (e.g. the driver's); only touches runtime-settable confs."""
-    for k, v in TUNED_CONF.items():
+    (e.g. the driver's); only touches runtime-settable confs.  The
+    stream width is the session's core count, as in get_spark."""
+    conf = {
+        **TUNED_CONF,
+        "spark.sql.shuffle.partitions": str(spark.sparkContext.defaultParallelism),
+    }
+    for k, v in conf.items():
         try:
             spark.conf.set(k, v)
         except Exception:

@@ -8,9 +8,13 @@ queries (operators/voting.py) are applied to streaming DataFrames --
 batch/stream parity by construction, which is the property the tests
 assert.
 
-At scale: streaming aggs shuffle on the group key exactly like batch;
-the watermark bounds state (candidates x windows), so state size is
-O(candidates * active-windows), independent of input volume.
+At scale: streaming aggs shuffle on the group key like batch, but at
+the stream width (spark.sql.shuffle.partitions, the core count; see
+session.py), not batch's AQE-coalesced 32: each partition is a state
+store committed every micro-batch and frozen into the checkpoint at
+first start.  The watermark bounds state (candidates x windows), so
+state size is O(candidates * active-windows), independent of input
+volume.
 """
 
 from __future__ import annotations

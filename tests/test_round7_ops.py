@@ -17,23 +17,27 @@ from de_realtime_voting_spark.operators import dedup
 
 
 def test_shuffle_width_tolerates_non_numeric_conf(spark):
-    """spark.sql.shuffle.partitions may hold "auto" on some vendor
-    platforms; the repartition width helper must fall back to
-    defaultParallelism instead of raising ValueError (ADVICE r6).
-    Vanilla Spark type-checks conf.set, so the non-numeric value is
-    simulated with a stub session exposing the same surface."""
+    """The repartition width helper returns the BATCH planning width:
+    AQE's initialPartitionNum when set, else
+    spark.sql.shuffle.partitions.  The latter may hold "auto" on some
+    vendor platforms; the helper must fall back to defaultParallelism
+    instead of raising ValueError (ADVICE r6).  Vanilla Spark
+    type-checks conf.set, so the non-numeric value is simulated with a
+    stub session exposing the same surface."""
 
     class _Conf:
-        def __init__(self, value):
-            self._value = value
+        def __init__(self, partitions, initial):
+            self._values = {
+                "spark.sql.shuffle.partitions": partitions,
+                "spark.sql.adaptive.coalescePartitions.initialPartitionNum": initial,
+            }
 
         def get(self, key):
-            assert key == "spark.sql.shuffle.partitions"
-            return self._value
+            return self._values[key]
 
     class _Stub:
-        def __init__(self, value, parallelism):
-            self.conf = _Conf(value)
+        def __init__(self, value, parallelism, initial=None):
+            self.conf = _Conf(value, initial)
             self.sparkContext = type(
                 "SC", (), {"defaultParallelism": parallelism}
             )()
@@ -41,9 +45,12 @@ def test_shuffle_width_tolerates_non_numeric_conf(spark):
     assert dedup._shuffle_width(_Stub("auto", 7)) == 7
     assert dedup._shuffle_width(_Stub(None, 5)) == 5
     assert dedup._shuffle_width(_Stub("48", 7)) == 48
-    # the real session resolves through the same helper
+    # initialPartitionNum (the batch width) wins over the stream width
+    assert dedup._shuffle_width(_Stub("4", 4, initial="32")) == 32
+    assert dedup._shuffle_width(_Stub("auto", 4, initial="32")) == 32
+    # the real session resolves to its batch width, not the stream width
     assert dedup._shuffle_width(spark) == int(
-        spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
     )
 
 

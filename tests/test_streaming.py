@@ -243,6 +243,125 @@ def test_checkpoint_recovery_resumes_state(spark, sf_dir, vote_json_dir):
     shutil.rmtree(ckpt, ignore_errors=True)
 
 
+def _state_store_widths(query):
+    """numStateStoreInstances of every state operator, over the
+    query's input-carrying batches."""
+    return [
+        op["numStateStoreInstances"]
+        for p in query.recentProgress
+        if p["numInputRows"] > 0
+        for op in p["stateOperators"]
+    ]
+
+
+def test_stateful_tally_one_state_store_per_core(spark, sf_dir, vote_json_dir):
+    """The stream shuffle width is the core count: each stateful
+    operator of the two live tallies opens one state store per core
+    per micro-batch, not one per BATCH shuffle partition (32)."""
+    from de_realtime_voting_spark.streaming import pipelines
+
+    votes = pipelines.watermark_votes(
+        parse_vote_stream(
+            spark.readStream.schema("value_json string").text(vote_json_dir),
+            "value_json",
+        )
+    )
+    tallies = {
+        "votes": stream_votes_per_candidate(votes),
+        "turnout": pipelines.stream_turnout_by_location(
+            votes,
+            load_table(spark, sf_dir, "customer"),
+            load_table(spark, sf_dir, "nation"),
+        ),
+    }
+    for name, df in tallies.items():
+        q = (
+            df.writeStream.format("memory")
+            .queryName(f"width_{name}")
+            .outputMode("update")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        widths = _state_store_widths(q)
+        assert widths, name
+        assert set(widths) == {spark.sparkContext.defaultParallelism}, name
+
+
+def test_batch_shuffle_width_pinned(spark, sf_dir):
+    """The batch half of the split: batch exchanges still plan at 32
+    (AQE coalesces them at runtime), and the explicit repartitions in
+    operators/dedup.py use the same width."""
+    import re
+
+    from de_realtime_voting_spark.operators import dedup
+
+    counts = load_table(spark, sf_dir, "events").groupBy("event_type").count()
+    plan = counts._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"hashpartitioning\(event_type#\d+, 32\)", plan), plan
+    assert dedup._shuffle_width(spark) == 32
+
+
+def test_restart_keeps_checkpointed_state_width(spark, vote_json_dir, duck):
+    """Spark freezes the stream width into the checkpoint's offset log
+    at first start: a tally started at width 32 restarts at 32 under
+    the core-count default, reads the new files, and its tally equals
+    the DuckDB oracle."""
+    import glob
+
+    from de_realtime_voting_spark.oracles import SQL
+
+    src = tempfile.mkdtemp(prefix="width_src_")
+    ckpt = tempfile.mkdtemp(prefix="width_ckpt_")
+    files = sorted(glob.glob(f"{vote_json_dir}/part-*"))
+    assert len(files) >= 2
+    shutil.copy(files[0], src)
+
+    def start():
+        stream = parse_vote_stream(
+            spark.readStream.schema("value_json string").text(src),
+            "value_json",
+        )
+        q = (
+            stream_votes_per_candidate(stream)
+            .writeStream.format("memory")
+            .queryName("width_restart")
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        return q
+
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "32")
+        assert set(_state_store_widths(start())) == {32}
+    finally:
+        spark.conf.set(key, saved)
+    assert int(saved) == spark.sparkContext.defaultParallelism
+
+    shutil.copy(files[1], src)  # new data arrives while "down"
+    q2 = start()
+    assert set(_state_store_widths(q2)) == {32}
+    with open(files[1]) as f:
+        assert sum(p["numInputRows"] for p in q2.recentProgress) == sum(1 for _ in f)
+
+    got = {
+        r["candidate_id"]: (r["total_votes"], r["total_weight"])
+        for r in spark.sql("SELECT * FROM width_restart").collect()
+    }
+    want = {
+        r[0]: (r[1], r[2])
+        for r in duck.sql(SQL["votes_per_candidate"]).fetchall()
+    }
+    assert got == want
+    shutil.rmtree(src, ignore_errors=True)
+    shutil.rmtree(ckpt, ignore_errors=True)
+
+
 def test_stream_dedup_checkpoint_no_reemit(spark, sf_dir):
     """Dedup-state recovery: kill the dedup stream, deliver a file
     containing BOTH already-seen and new docs, restart from the same

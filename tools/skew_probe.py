@@ -157,6 +157,11 @@ def main():
             "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "1MB",
             "spark.sql.adaptive.advisoryPartitionSizeInBytes": "512KB",
             "spark.sql.adaptive.coalescePartitions.enabled": "false",
+            # with coalescing off, exchanges plan at shuffle.partitions
+            # (the session's stream width); keep the other arms' width
+            "spark.sql.shuffle.partitions": spark.conf.get(
+                "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+            ),
         },
         salted=False,
     )

@@ -217,6 +217,10 @@ def main() -> None:
             "rows_per_sec excludes drain-poll idle batches; single-shot "
             "rows -- compare shapes, not +-20% deltas"
         ),
+        "cpus": spark.sparkContext.defaultParallelism,
+        "stream_shuffle_partitions": int(
+            spark.conf.get("spark.sql.shuffle.partitions")
+        ),
         "n_pipelines": len(rows),
         "rows": sorted(rows.values(), key=lambda r: r["pipeline"]),
     }
