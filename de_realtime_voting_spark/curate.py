@@ -15,8 +15,9 @@ Scale shape: every rule is the same map-side expression / single
 shuffle the audited queries use; the write itself partitions by
 (split, lang) so downstream training readers prune to their split
 without scanning the rest.  Nothing in this module collects corpus
-data to the driver -- the manifest aggregates |splits| x |langs|
-rows.
+data -- the manifest is one aggregate of |splits| x |langs| x
+|sources| rows over the written data (plus the --pack window stats),
+folded in Python.
 """
 
 from __future__ import annotations
@@ -43,6 +44,15 @@ def _pack_shard_count(n_docs: int) -> int:
     from .constants import PACK_SHARD_TARGET_DOCS, PACK_SHARDS
 
     return max(int(PACK_SHARDS), -(-int(n_docs) // int(PACK_SHARD_TARGET_DOCS)))
+
+
+def _sum_rows(rows, field: str, empty=0):
+    """SUM(``field``) over aggregate ``rows`` under SQL's null rule:
+    NULLs are skipped, and a sum over no non-NULL value is NULL --
+    returned as ``empty`` (0 for the counts, which are never NULL;
+    None for a token sum, as one SQL SUM over all rows would give)."""
+    vals = [r[field] for r in rows if r[field] is not None]
+    return sum(vals) if vals else empty
 
 
 def _scratch_dirs(spark) -> list[str]:
@@ -294,6 +304,13 @@ def curate_corpus(
             _stage_caches.append(d_kept)
             n_dsir_kept = d_kept.count()
             keep = keep.join(d_kept, "doc_id", "left_semi")
+        # persist: the keep-set (every gate above, fuzzy MinHash join
+        # included) is read twice when --pack joins its window
+        # assignments back to ``curated``, and again by --excise-spans'
+        # delta agg before the write -- unpersisted, the whole gate
+        # chain would run once per read
+        keep = keep.persist()
+        _stage_caches.append(keep)
         curated = documents.join(keep, "doc_id")
         if temperature_sample:
             from .operators.pipeline import _temp_bucket, _temperature_thresholds
@@ -422,19 +439,32 @@ def curate_corpus(
         )
         from .functions.columns import tokens
 
-        per_part = (
-            written.groupBy("split", "lang")
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                # the SAME tokens() definition as every audit query, so
-                # manifest totals are comparable to the waterfall's
-                # stage rows token-for-token (cross-artifact pytest)
-                F.sum(F.size(tokens(F.col("text")))).cast("bigint").alias(
-                    "approx_tokens"
-                ),
-            )
-            .collect()
-        )
+        # ONE aggregate over the written data feeds every count below:
+        # per (split, lang, source) rows, folded in Python with SQL
+        # SUM's null rule (_sum_rows), so no count re-reads the files
+        n_tok = F.greatest(F.size(tokens(F.col("text"))), F.lit(0))
+        counts = [
+            F.count(F.lit(1)).alias("n_docs"),
+            # the SAME tokens() definition as every audit query, so
+            # manifest totals are comparable to the waterfall's stage
+            # rows token-for-token (cross-artifact pytest)
+            F.sum(F.size(tokens(F.col("text")))).cast("bigint").alias(
+                "approx_tokens"
+            ),
+        ]
+        if pack:
+            counts += [
+                F.count_if(F.col("pack_window") < 0).alias("n_unpacked"),
+                # overlong docs (pre-clamp token count > window) got a
+                # dedicated window whose TEXT is not truncated -- the
+                # loader truncates at read.  Counted so a consumer can
+                # see how many windows rely on that (ADVICE r10).
+                F.count_if(n_tok > _win).alias("n_overlong"),
+            ]
+        rows = written.groupBy("split", "lang", "source").agg(*counts).collect()
+        per_part: dict = {}
+        for r in rows:
+            per_part.setdefault((r["split"], r["lang"]), []).append(r)
         # written-bytes from the files on disk (what a training job
         # pays to read), wall-clock from pipeline entry: both are
         # operational facts a capacity plan needs beside the token
@@ -448,7 +478,7 @@ def curate_corpus(
         manifest = {
             "out_dir": out_dir,
             "n_input_docs": n_input_docs,
-            "n_written_docs": written.count(),
+            "n_written_docs": _sum_rows(rows, "n_docs"),
             "written_bytes": written_bytes,
             "wall_s": round(time.perf_counter() - _t0, 2),
             "scratch_preflight": scratch,
@@ -465,12 +495,12 @@ def curate_corpus(
             "partitions": sorted(
                 (
                     {
-                        "split": r["split"],
-                        "lang": r["lang"],
-                        "n_docs": r["n_docs"],
-                        "approx_tokens": r["approx_tokens"],
+                        "split": split,
+                        "lang": lang,
+                        "n_docs": _sum_rows(rs, "n_docs"),
+                        "approx_tokens": _sum_rows(rs, "approx_tokens", None),
                     }
-                    for r in per_part
+                    for (split, lang), rs in per_part.items()
                 ),
                 key=lambda d: (d["split"], d["lang"]),
             ),
@@ -499,12 +529,7 @@ def curate_corpus(
                     "lang",
                     "pack_shard",
                     "pack_window",
-                    F.least(
-                        F.greatest(
-                            F.size(tokens(F.col("text"))), F.lit(0)
-                        ),
-                        F.lit(_win),
-                    ).alias("_used"),
+                    F.least(n_tok, F.lit(_win)).alias("_used"),
                 )
                 .where(F.col("pack_window") >= 0)
                 .groupBy("split", "lang", "pack_shard", "pack_window")
@@ -515,15 +540,6 @@ def curate_corpus(
                 F.avg(F.col("used") / _win).alias("avg_fill"),
                 F.max("used").alias("max_used"),
             ).collect()[0]
-            n_unpacked = written.where(F.col("pack_window") < 0).count()
-            # overlong docs (pre-clamp token count > window) got a
-            # dedicated window whose TEXT is not truncated -- the
-            # loader truncates at read.  Counted in the manifest so a
-            # consumer can see how many windows rely on that
-            # (ADVICE r10).
-            n_overlong = written.where(
-                F.greatest(F.size(tokens(F.col("text"))), F.lit(0)) > _win
-            ).count()
             manifest["pack"] = {
                 "window_tokens": _win,
                 "n_shards": _n_shards,
@@ -534,21 +550,15 @@ def curate_corpus(
                     if pstats["max_used"] is not None
                     else 0
                 ),
-                "n_unpacked_docs": int(n_unpacked),
-                "n_overlong_docs": int(n_overlong),
+                "n_unpacked_docs": _sum_rows(rows, "n_unpacked"),
+                "n_overlong_docs": _sum_rows(rows, "n_overlong"),
             }
         if epoch_shuffle is not None:
             manifest["epoch_shuffle"] = {"seed": int(epoch_shuffle)}
         if temperature_sample:
             # per-source target vs realized keep rate over the WRITTEN
             # docs: thresholds is |sources| rows (already persisted), the
-            # realized side is one agg over the written data
-            per_src = {
-                r["source"]: r["n"]
-                for r in written.groupBy("source")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
+            # realized side folds the manifest aggregate's rows
             # HALF-UP to 6 places -- the same floor(x*1e6 + 0.5)/1e6
             # rule as functions.columns.round_half_up, NOT python's
             # banker's round(): the manifest target must equal
@@ -562,7 +572,10 @@ def curate_corpus(
                         "source": r["source"],
                         "keep_rate_target": math.floor(r["rate"] * 1e6 + 0.5)
                         / 1e6,
-                        "n_written": per_src.get(r["source"], 0),
+                        "n_written": _sum_rows(
+                            [w for w in rows if w["source"] == r["source"]],
+                            "n_docs",
+                        ),
                     }
                     for r in thresholds.collect()
                 ),

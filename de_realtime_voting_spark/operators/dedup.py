@@ -157,26 +157,28 @@ def _band_hash_exprs(sig) -> list:
 def _doc_bands(documents: DataFrame) -> DataFrame:
     """(doc_id, band_idx, band_hash): LSH bands over the MinHash
     signature; docs sharing any band are near-dup candidates."""
-    return _doc_bands_from(_doc_shingles(documents))
+    return _doc_bands_from(_with_sig(_doc_shingles(documents)))
+
+
+def _with_sig(sh: DataFrame) -> DataFrame:
+    """``sh`` plus ``sig``, the Arrow MinHash signature of its
+    ``shingles`` column (bit-identical to the Catalyst
+    minhash_signature, pinned in tests/test_functions.py) -- the one
+    place a batch signature is computed.  _shingle_digests persists it
+    beside the digests, so banding and every signature reader share one
+    evaluation per doc."""
+    from ..functions.pandas_udfs import minhash_signature_pandas
+
+    return sh.withColumn("sig", minhash_signature_pandas(F.col("shingles")))
 
 
 def _doc_bands_from(sh: DataFrame) -> DataFrame:
-    # Arrow signature (batch digest cache; bit-identical to the
-    # Catalyst minhash_signature, pinned in tests/test_functions.py).
-    # Measured honestly: the win is modest here -- 0.25 s vs 0.31 s
-    # for the signature step at sf0.1 (shingles are high-cardinality,
-    # so the cache hits less than SimHash's token cache) -- and the
-    # band JOIN dominates the ops either way; kept for consistency
-    # with the SimHash Arrow path, not as a headline gain.  The
-    # per-doc band md5s stay Catalyst: N_BANDS short hashes per ROW,
-    # not per shingle, and codegen handles them fine.
-    from ..functions.pandas_udfs import minhash_signature_pandas
-
-    sig = minhash_signature_pandas(F.col("shingles"))
+    # Bands over ``sh``'s ``sig`` column (_with_sig).  The per-doc band
+    # md5s stay Catalyst: N_BANDS short hashes per ROW, not per
+    # shingle, and codegen handles them fine.
     bands = F.array(*_band_hash_exprs(F.col("sig")))
-    return (
-        sh.select("doc_id", sig.alias("sig"))
-        .select("doc_id", F.posexplode(bands).alias("band_idx", "band_hash"))
+    return sh.select(
+        "doc_id", F.posexplode(bands).alias("band_idx", "band_hash")
     )
 
 
@@ -240,11 +242,13 @@ def _band_candidate_pairs(bands: DataFrame) -> DataFrame:
 
 
 def _shingle_digests(documents: DataFrame) -> DataFrame:
-    """(doc_id, shingles, dig), PERSISTED: the shingle frame with each
-    doc's shingle set hashed ONCE to 60-bit digests
-    (functions.columns.md5_int60_set).  Every MinHash consumer feeds
-    it to banding AND both verify sides, so the signature and the
-    per-shingle md5 fold run once, not once per use (r13).  Deliberately
+    """(doc_id, shingles, dig, sig), PERSISTED: the shingle frame with
+    each doc's shingle set hashed ONCE to 60-bit digests
+    (functions.columns.md5_int60_set) and signed ONCE (_with_sig).
+    Every MinHash consumer feeds it to banding AND both verify sides,
+    so the signature and the per-shingle md5 fold run once per doc,
+    not once per use: an unpersisted band frame read by both sides of
+    a band join would re-run the Arrow signature per side.  Deliberately
     not unpersisted: the lazy plan outlives the function; the cache is
     LRU-evictable and the harnesses clearCache() between queries.
 
@@ -263,7 +267,9 @@ def _shingle_digests(documents: DataFrame) -> DataFrame:
     from ..functions.columns import md5_int60_set
 
     sh = _doc_shingles(documents)
-    return sh.withColumn("dig", md5_int60_set(F.col("shingles"))).persist()
+    return _with_sig(
+        sh.withColumn("dig", md5_int60_set(F.col("shingles")))
+    ).persist()
 
 
 def _verify_sides(
@@ -1690,26 +1696,17 @@ def minhash_jaccard_estimate(documents: DataFrame) -> DataFrame:
     candidate set.  Estimates are exact rationals (matches / SIGS),
     so both engines agree bit-for-bit.
     """
-    from ..functions.pandas_udfs import minhash_signature_pandas
-
     sh = _shingle_digests(documents)
-
-    sigd = sh.select(
-        "doc_id",
-        "shingles",
-        "dig",
-        minhash_signature_pandas(F.col("shingles")).alias("sig"),
-    )
     cand = _band_candidate_pairs(_doc_bands_from(sh))
     # digest sets ride the join (see _shingle_digests); the signature
     # arrays must ride too, so the sides are built here rather than
     # through _verify_sides
-    sa = sigd.select(
+    sa = sh.select(
         F.col("doc_id").alias("doc_a"),
         F.col("dig").alias("sh_a"),
         F.col("sig").alias("sig_a"),
     )
-    sb = sigd.select(
+    sb = sh.select(
         F.col("doc_id").alias("doc_b"),
         F.col("dig").alias("sh_b"),
         F.col("sig").alias("sig_b"),
@@ -2520,10 +2517,12 @@ def segment_minhash_dedup(documents: DataFrame) -> DataFrame:
         .withColumn("dig", md5_int60_set(F.col("rep.shingles")))
         .persist()  # feeds banding, both verify sides, and the occ join
     )
-    reps = classes.select(
-        F.col("rep.sid").alias("doc_id"),
-        F.col("rep.shingles").alias("shingles"),
-        "dig",
+    reps = _with_sig(
+        classes.select(
+            F.col("rep.sid").alias("doc_id"),
+            F.col("rep.shingles").alias("shingles"),
+            "dig",
+        )
     )
     # reuse the shared banding + candidate machinery verbatim (reps are
     # keyed 'doc_id' for the duration; ids are sids)

@@ -1104,13 +1104,14 @@ def stream_fuzzy_decontam_hits(
         _band_hash_exprs,
         _doc_bands_from,
         _doc_shingles,
+        _with_sig,
     )
 
     ev_sh = _doc_shingles(eval_corpus).persist()
     # bounded-index collect (the eval_gram_set / Bloom-image pattern):
     # band-key -> list of eval doc ids sharing that band
     index: dict[str, list[int]] = {}
-    for r in _doc_bands_from(ev_sh).collect():
+    for r in _doc_bands_from(_with_sig(ev_sh)).collect():
         index.setdefault(f"{r['band_idx']}|{r['band_hash']}", []).append(
             r["doc_id"]
         )

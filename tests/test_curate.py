@@ -586,3 +586,70 @@ def test_scratch_preflight_estimator_and_abort(spark, sf_dir):
         raise AssertionError("expected RuntimeError")
     except RuntimeError as e:
         assert "SPARK_LOCAL_DIRS" in str(e) and "zstd" in str(e)
+
+
+def test_curate_call_job_budget_and_manifest_recount(spark, sf_dir, monkeypatch):
+    """One curate_corpus call with the benchmark's stage set
+    (perfbench/curate.py) at sf0.01: the keep-set is persisted once
+    (pack reads it twice) and the manifest's counts come from ONE
+    aggregate over the written data, so a cache-cleared call runs at
+    most 61 Spark jobs (77 when pack re-ran the gate chain, the
+    manifest ran six more actions and the MinHash signature was
+    evaluated per band-join side).  Every count the fold produces must
+    equal a pyarrow recount of the written parquet.  The pack window
+    is narrowed to 64 tokens so the overlong count is not zero (no
+    sf0.01 doc reaches the shipped 256)."""
+    import pyarrow.dataset as ds
+
+    from de_realtime_voting_spark import constants
+    from tests.test_sources import _with_jobs
+
+    win = 64
+    monkeypatch.setattr(constants, "PACK_WINDOW_TOKENS", win)
+
+    docs = load_table(
+        spark, os.path.join(os.path.dirname(sf_dir), "sf0.01"), "documents"
+    )
+    d = tempfile.mkdtemp(prefix="curated_jobs_")
+    spark.catalog.clearCache()
+    try:
+        m, n_jobs = _with_jobs(
+            spark,
+            lambda: curate_corpus(
+                docs,
+                d,
+                drop_contaminated=True,
+                fuzzy_gate=True,
+                temperature_sample=True,
+                dsir_sample=True,
+                pack=True,
+                epoch_shuffle=11,
+            ),
+        )
+        assert n_jobs <= 61
+
+        pdf = (
+            ds.dataset(d, format="parquet", partitioning="hive")
+            .to_table()
+            .to_pandas()
+        )
+        ntok = pdf["text"].map(lambda t: len([w for w in t.split(" ") if w]))
+        assert m["n_written_docs"] == len(pdf) > 0
+        parts = pdf.assign(ntok=ntok).groupby(["split", "lang"])["ntok"]
+        assert m["partitions"] == [
+            {"split": s, "lang": g, "n_docs": int(c), "approx_tokens": int(t)}
+            for (s, g), c, t in zip(
+                parts.count().index, parts.count(), parts.sum()
+            )
+        ]
+        assert m["pack"]["n_unpacked_docs"] == int((pdf["pack_window"] < 0).sum())
+        assert m["pack"]["window_tokens"] == win
+        assert m["pack"]["n_overlong_docs"] == int((ntok > win).sum()) > 0
+        per_src = pdf["source"].value_counts().to_dict()
+        assert m["temperature"] and all(
+            t["n_written"] == per_src.get(t["source"], 0)
+            for t in m["temperature"]
+        )
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+        spark.catalog.clearCache()

@@ -3,6 +3,8 @@ cartesians -- the properties that keep operators viable at 100 TB."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from de_realtime_voting_spark.operators import analytics, dedup, voting
@@ -148,3 +150,58 @@ def test_bucketed_documents_dedup_has_no_exchange(spark, sf_dir):
         assert total == docs.count()
     finally:
         spark.sql("DROP TABLE IF EXISTS docs_bucketed")
+
+
+def _signature_evals(spark, df) -> int:
+    """Arrow MinHash signature evaluations in ``df``'s executed plan:
+    ``minhash_signature_pandas`` ArrowEvalPython nodes of the final
+    AQE plans, counting each cached (InMemoryRelation) plan once --
+    the cache is built once however many scans read it."""
+    seen = set()
+
+    def walk(node) -> int:
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan())
+        if name.endswith("QueryStageExec"):
+            return walk(node.plan())
+        if name == "InMemoryTableScanExec":
+            rel = node.relation().cacheBuilder()
+            key = spark._jvm.System.identityHashCode(rel)
+            if key in seen:
+                return 0
+            seen.add(key)
+            return walk(rel.cachedPlan())
+        n = int(
+            name == "ArrowEvalPythonExec"
+            and "minhash_signature_pandas" in node.udfs().toString()
+        )
+        kids = node.children()
+        return n + sum(walk(kids.apply(i)) for i in range(kids.size()))
+
+    df.collect()  # executes df's own plan, so AQE plans are final
+    return walk(df._jdf.queryExecution().executedPlan())
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "fuzzy_decontam",
+        "dedup_incremental",
+        "minhash_jaccard_estimate",
+        "dedup_minhash_topk",
+    ],
+)
+def test_minhash_consumers_sign_each_doc_once(spark, sf_dir, name):
+    """The signature is persisted beside the digests
+    (dedup._shingle_digests), so a consumer whose band frame feeds
+    both sides of a join, or that reads ``sig`` itself, evaluates the
+    Arrow signature once, not once per reader (2, 2, 3 and 2 before
+    it was persisted)."""
+    spark.catalog.clearCache()
+    try:
+        sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+        df = QUERY_REGISTRY[name](spark, sf)
+        assert _signature_evals(spark, df) == 1
+    finally:
+        spark.catalog.clearCache()

@@ -242,6 +242,7 @@ def test_verify_join_digest_sides_equal_legacy_string_sides(spark):
         _band_candidate_pairs,
         _doc_bands_from,
         _doc_shingles,
+        _with_sig,
         dedup_minhash_pairs,
     )
 
@@ -253,7 +254,7 @@ def test_verify_join_digest_sides_equal_legacy_string_sides(spark):
     }
     # legacy formulation: raw distinct string sets on both sides
     sh = _doc_shingles(docs).persist()
-    cand = _band_candidate_pairs(_doc_bands_from(sh))
+    cand = _band_candidate_pairs(_doc_bands_from(_with_sig(sh)))
     sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
     sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
     jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(

@@ -519,7 +519,38 @@ def _fmt_bytes(n: int) -> str:
     return f"{n} B"
 
 
-def _write_md(results: list[dict], horizon: list[dict] | None = None) -> None:
+# level-2 headings _write_md generates; every other ``## `` section of
+# an existing STATE_AUDIT.md is hand-written and survives a re-run
+_GENERATED_SECTIONS = ("## Horizon soak", "## Contracts measured")
+
+
+def _h2_sections(text: str) -> list[str]:
+    """``text``'s ``## `` sections, each from its heading to the next
+    one, trailing blank lines stripped."""
+    blocks: list[list[str]] = []
+    for line in text.splitlines():
+        if line.startswith("## "):
+            blocks.append([line])
+        elif blocks:
+            blocks[-1].append(line)
+    return ["\n".join(b).rstrip("\n") for b in blocks]
+
+
+def _carry_hand_sections(generated: str, previous: str) -> str:
+    """``generated`` followed by every ``## `` section of ``previous``
+    the template does not generate (the hand-written r11 capacity
+    formula, say), in their order."""
+    kept = [
+        s for s in _h2_sections(previous) if not s.startswith(_GENERATED_SECTIONS)
+    ]
+    return generated + "".join(f"\n{s}\n" for s in kept)
+
+
+def _write_md(
+    results: list[dict],
+    horizon: list[dict] | None = None,
+    path: str = os.path.join(_REPO, "STATE_AUDIT.md"),
+) -> None:
     lines = [
         "# STATE_AUDIT — streaming state-store soak (RocksDB)",
         "",
@@ -590,8 +621,12 @@ def _write_md(results: list[dict], horizon: list[dict] | None = None) -> None:
         "run) is executed and asserted by",
         "`tests/test_state_audit.py::test_join_state_evicts_over_time`.",
     ]
-    with open(os.path.join(_REPO, "STATE_AUDIT.md"), "w") as f:
-        f.write("\n".join(lines) + "\n")
+    text = "\n".join(lines) + "\n"
+    if os.path.exists(path):
+        with open(path) as f:
+            text = _carry_hand_sections(text, f.read())
+    with open(path, "w") as f:
+        f.write(text)
 
 
 if __name__ == "__main__":
